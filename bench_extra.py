@@ -79,13 +79,15 @@ def write_explains(names: list[str], when: str) -> None:
 
 
 def run_audio(reps: int = 1) -> dict:
+    if reps < 1:
+        raise ValueError(f"run_audio: reps must be >= 1, got {reps}")
     import bench as B
 
     spark = _spark()
     out = []
     corpus_dir = os.environ.get("SPARK_GRAFT_CORPUS")
     n = 0
-    for _ in range(max(1, reps)):
+    for _ in range(reps):
         n, wall, stages, corpus_dir = B.run_audio_dedup(spark, corpus_dir)
         out.append({"wall": round(wall, 3), "stages": stages})
     return {"n_clips": n, "runs": out}
@@ -100,7 +102,7 @@ def _noop(df) -> float:
 def run_audio_decompose() -> dict:
     """Isolate the pieces inside the audio pipeline's verified_pairs
     stage with noop sinks (guide §1.4). Builds the same frames as
-    DedupPipeline.run (fused scan mode) from a pre-generated corpus."""
+    DedupPipeline.run from a pre-generated corpus."""
     import tempfile
 
     from pyspark.sql import functions as F
@@ -117,7 +119,7 @@ def run_audio_decompose() -> dict:
 
     spark = _spark()
     sc = spark.sparkContext
-    cfg = DedupConfig(signature_scan_mode="fused")
+    cfg = DedupConfig()
     corpus_dir = os.environ.get("SPARK_GRAFT_CORPUS")
     if not corpus_dir:
         corpus_dir = os.path.join(tempfile.mkdtemp(prefix="bench_corpus_"), "audio_clips")

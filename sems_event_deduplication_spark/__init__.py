@@ -12,7 +12,7 @@ Pipeline (SURVEY.md §3.1 "new-engine lifecycle"):
 
     read audio_clips -> normalize transcript -> exact dedup
       -> MinHash signatures (text) + SimHash signatures (audio)
-      -> LSH band candidate self-join (salted / skew-aware)
+      -> LSH band candidate self-join (star-edge capped / skew-aware)
       -> verify (exact Jaccard / Hamming / suffix-array containment)
       -> connected components (large-star / small-star)
       -> survivor selection -> clusters + lineage + metrics

@@ -91,8 +91,6 @@ class DedupConfig:
                                   # anti_broadcast: always broadcast the
                                   #   dropped-id set + left_anti (skip the
                                   #   count when the dup rate is known low)
-                                  # semi_broadcast: broadcast keepers (only
-                                  #   when dup rate is huge)
                                   # shuffle: no broadcast — pair with tables
                                   #   bucketed on clip_id for a zero-Exchange
                                   #   join (WarehouseIO.save_bucketed)
@@ -145,38 +143,16 @@ class DedupConfig:
 
     # --- signature scan shape (plans/pipeline.py) --------------------
     signature_scan_mode: str = "fused"
-                                  # fused (default): ONE payload pass
-                                  #   computes digests + all signatures;
-                                  #   exact dedup then ranks the narrow
-                                  #   digest projection and keepers are
-                                  #   filtered by a broadcast anti-join on
-                                  #   the signature table. The honest
-                                  #   100 TB shape: reading the payload
-                                  #   twice costs more than fingerprinting
-                                  #   the (few) dup rows — dedup_first's
-                                  #   second payload scan measured at
-                                  #   stage efficiency 0.46
-                                  #   (BENCH/BASELINE.md), which is why
-                                  #   every scale document and the
-                                  #   flagship bench pick fused; as of r5
-                                  #   defaults agree with them.
-                                  # dedup_first: digest pass -> drop exact
-                                  #   dups -> signature pass over keepers
-                                  #   (reference ordering; two payload
-                                  #   reads, no FFT wasted on dups — right
-                                  #   only when the dup rate is high
-                                  #   enough that skipped FFTs beat the
-                                  #   extra scan, e.g. boilerplate
-                                  #   mega-dup corpora)
+                                  # the only accepted value (one payload
+                                  # pass); kept because the frozen
+                                  # bench.py passes it
 
     # --- candidate-join scale controls ------------------------------
     max_bucket_size: int = 256    # LSH buckets larger than this use star-edges
                                   # (member -> bucket-min) instead of all-pairs
-    salt_buckets: int = 16        # salt fan-out used to spread verify work
     containment_bands: int = 2    # bands scanned by the suffix-array tier
 
     # --- clustering ------------------------------------------------
-    min_cluster_size: int = 2     # reference community_detection min size (cluster_news.py:22)
     cc_max_iterations: int = 25   # large-star/small-star fixpoint cap
     cc_local_edges: int = 2_000_000
                                   # <= this many distinct dedup edges:
@@ -197,19 +173,11 @@ class DedupConfig:
                                   # where the edge list can approach
                                   # corpus size). 0 disables.
 
-    # --- temporal semantics (reference create_silver_label.py:78,236,380) ---
-    temporal_eps_days: int = 1        # 1-D DBSCAN eps
-    temporal_min_samples: int = 3     # 1-D DBSCAN min_samples
-    merge_max_gap_days: int = 10      # cluster-merge temporal gate
-    merge_entity_overlap: float = 0.5 # entity overlap >= 0.5 (max-denominator)
-    merge_entity_min_count: int = 4   # entity mentioned > 4x per cluster
-
     # --- determinism ------------------------------------------------
     seed: int = 42
 
     # --- spark knobs -------------------------------------------------
     shuffle_partitions: int = 32
-    arrow_max_records: int = 10_000
 
     def as_dict(self) -> dict:
         return asdict(self)
@@ -229,10 +197,9 @@ class DedupConfig:
                 f"offset_verify_mode must be 'exact' or 'count', "
                 f"got {self.offset_verify_mode!r}"
             )
-        if self.signature_scan_mode not in ("fused", "dedup_first"):
+        if self.signature_scan_mode != "fused":
             raise ValueError(
-                f"signature_scan_mode must be 'fused' or 'dedup_first', "
-                f"got {self.signature_scan_mode!r}"
+                f"signature_scan_mode must be 'fused', got {self.signature_scan_mode!r}"
             )
         if self.exact_digest_algo not in ("xxh128", "sha256"):
             raise ValueError(

@@ -373,12 +373,6 @@ def pack_bits_to_words(bit_flags: np.ndarray, bits: int) -> list[int]:
     return [int(w) for w in np.packbits(padded, bitorder="little").view("<u8").view(np.int64)]
 
 
-def simhash_from_fingerprint(fp: np.ndarray, proj: np.ndarray) -> list[int]:
-    """Sign projection -> list of int64 words (bits = proj rows)."""
-    bits = (proj @ fp) > 0
-    return pack_bits_to_words(bits, len(bits))
-
-
 def make_audio_simhash_udf(
     frame: int, hop: int, n_bands: int, bits: int, seed: int,
     floor_db: float = FP_FLOOR_DB,

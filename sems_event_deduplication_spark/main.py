@@ -21,6 +21,38 @@ import sys
 import time
 
 
+def _config(p: argparse.ArgumentParser, pairs: list[str]):
+    """``k=v`` overrides -> DedupConfig. A malformed pair, an unknown
+    key or a rejected value is an argparse error naming it, raised
+    before any SparkSession starts."""
+    from .conf import DedupConfig
+
+    base = DedupConfig()
+    overrides = {}
+    for kv in pairs:
+        k, sep, v = kv.partition("=")
+        if not sep:
+            p.error(f"--config expects k=v, got {kv!r}")
+        if not hasattr(base, k):
+            p.error(f"--config: unknown DedupConfig key {k!r}")
+        cur = getattr(base, k)
+        try:
+            overrides[k] = type(cur)(v) if not isinstance(cur, bool) else v.lower() == "true"
+        except ValueError:
+            p.error(f"--config: {k}={v!r} is not a {type(cur).__name__}")
+    if ("num_perm" in overrides or "bands" in overrides) and "rows_per_band" not in overrides:
+        # keep the bands*rows == num_perm invariant without making the
+        # user spell out all three
+        np_ = overrides.get("num_perm", base.num_perm)
+        b_ = overrides.get("bands", base.bands)
+        if np_ % b_ == 0:
+            overrides["rows_per_band"] = np_ // b_
+    try:
+        return DedupConfig(**overrides)
+    except ValueError as exc:
+        p.error(f"--config: {exc}")
+
+
 def parse_args(argv):
     p = argparse.ArgumentParser(description="PySpark near-dup dedup pipeline")
     p.add_argument("--input", help="parquet path or Iceberg table of audio_clips")
@@ -29,36 +61,23 @@ def parse_args(argv):
     p.add_argument("--warehouse", required=True, help="checkpoint dir / catalog")
     p.add_argument("--resume", action="store_true", help="skip committed stages")
     p.add_argument("--no-audio", action="store_true")
-    p.add_argument("--checkpoint-mode", choices=["all", "min"], default="all")
     p.add_argument("--cores", type=int, default=None)
     p.add_argument("--config", nargs="*", default=[],
                    help="DedupConfig overrides, k=v (e.g. jaccard_threshold=0.7)")
-    return p.parse_args(argv)
+    args = p.parse_args(argv)
+    args.config = _config(p, args.config)
+    return args
 
 
 def main(argv=None):
     args = parse_args(argv if argv is not None else sys.argv[1:])
 
-    from .conf import DedupConfig
     from .plans.pipeline import DedupPipeline
     from .session import get_spark
     from .sources.readers import read_audio_clips
     from .sources.warehouse import WarehouseIO
 
-    overrides = {}
-    base = DedupConfig()
-    for kv in args.config:
-        k, v = kv.split("=", 1)
-        cur = getattr(base, k)  # raises on unknown key
-        overrides[k] = type(cur)(v) if not isinstance(cur, bool) else v.lower() == "true"
-    if ("num_perm" in overrides or "bands" in overrides) and "rows_per_band" not in overrides:
-        # keep the bands*rows == num_perm invariant without making the
-        # user spell out all three
-        np_ = overrides.get("num_perm", base.num_perm)
-        b_ = overrides.get("bands", base.bands)
-        if np_ % b_ == 0:
-            overrides["rows_per_band"] = np_ // b_
-    cfg = DedupConfig(**overrides)
+    cfg = args.config
 
     spark = get_spark("sems-dedup-cli", cores=args.cores,
                       shuffle_partitions=cfg.shuffle_partitions)
@@ -76,12 +95,7 @@ def main(argv=None):
     wh = WarehouseIO(spark, args.warehouse)
     pipe = DedupPipeline(spark, cfg, wh)
     t0 = time.monotonic()
-    res = pipe.run(
-        clips,
-        resume=args.resume,
-        with_audio=not args.no_audio,
-        checkpoint_mode=args.checkpoint_mode,
-    )
+    res = pipe.run(clips, resume=args.resume, with_audio=not args.no_audio)
     wall = time.monotonic() - t0
     print(json.dumps({
         "n_clips": n,

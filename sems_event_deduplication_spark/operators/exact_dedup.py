@@ -30,26 +30,6 @@ def dedup_keep_last(
     )
 
 
-def exact_dedup_by_content(
-    df: DataFrame,
-    text_col: str = "transcript_norm",
-    payload_col: str | None = "bytes",
-    order_col: str = "clip_id",
-    algo: str = "xxh128",
-) -> DataFrame:
-    """Content-hash exact dedup: cheap cardinality cut before LSH.
-
-    Mirrors the reference's "dedup before the expensive stage" ordering
-    (``create_silver_label.py:67`` before ``:76``), keyed on digests so
-    binary payloads don't ride the shuffle. Digest algo notes:
-    ``exact_dedup_digest_keys``.
-    """
-    key_names, digests = exact_dedup_digest_keys(text_col, payload_col, algo)
-    with_keys = df.select("*", *digests)
-    out = dedup_keep_last(with_keys, key_names, order_col)
-    return out.drop(*key_names)
-
-
 def digest_rank_edges(
     narrow: DataFrame,
     key_names: list[str],
@@ -58,7 +38,7 @@ def digest_rank_edges(
 ) -> DataFrame:
     """The keep-last ranking core: (id, order, digest keys) ->
     (id_a = keeper, id_b = dropped) edge list. Shared by
-    ``exact_dedup_with_edges`` and the pipeline's fused scan path so
+    ``exact_dedup_with_edges`` and the pipeline so
     keep-last semantics and edge orientation cannot drift apart.
 
     Skew bound: the window partitions by the digest keys, so a
@@ -103,14 +83,11 @@ def kept_from_edges(
     """Keeper rows of ``df`` given a MATERIALIZED edge table (e.g. a
     warehouse checkpoint): resolve the re-attach strategy (auto counts
     the cheap materialized table, never the payload lineage) and apply
-    the corresponding join. Shared by both pipeline scan modes."""
+    the corresponding join."""
     dropped_ids = edges.select(F.col("id_b").alias(id_col))
     strategy = resolve_dedup_strategy(strategy, dropped_ids, max_broadcast_ids)
     if strategy == "anti_broadcast":
         return df.join(F.broadcast(dropped_ids), id_col, "left_anti")
-    if strategy == "semi_broadcast":
-        keep_ids = df.select(id_col).join(dropped_ids, id_col, "left_anti")
-        return df.join(F.broadcast(keep_ids), id_col, "left_semi")
     if strategy == "shuffle":
         return df.join(dropped_ids, id_col, "left_anti")
     raise ValueError(f"unknown exact-dedup strategy: {strategy!r}")
@@ -120,8 +97,8 @@ def exact_dedup_digest_keys(
     text_col: str, payload_col: str | None, algo: str = "xxh128"
 ) -> tuple[list[str], list]:
     """(key column names, digest select expressions) for content-hash
-    exact dedup — one definition shared by the operator and both
-    pipeline scan modes.
+    exact dedup — one definition shared by the operator and the
+    pipeline.
 
     ``algo``:
 
@@ -199,8 +176,6 @@ def exact_dedup_with_edges(
       is exactly what dedup removes — at a realistic dup rate it is a
       small fraction of the corpus, unlike the keeper set (≈ all rows),
       so the broadcast stays driver-safe even at 10⁹+ input rows.
-    - ``semi_broadcast``: broadcast the keeper ids + ``left_semi`` —
-      right only when the dup rate is huge (keepers ≪ dropped).
     - ``shuffle``: plain ``left_anti`` with no broadcast hint — the
       fallback when *both* id sets outgrow the driver; on a real
       cluster pair it with tables bucketed by ``id_col``

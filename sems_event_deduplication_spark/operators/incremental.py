@@ -137,7 +137,7 @@ def incremental_dedup(
     [, digest key columns]). The exact tier keys on the SAME
     ``exact_dedup_digest_keys`` definition as the pipeline
     (``cfg.exact_digest_algo``), so the pipeline's persisted digest
-    columns are reused verbatim when present (the fused scan mode
+    columns are reused verbatim when present (the pipeline
     persists them on the signatures table); a text-only index without
     them gets text keys derived from ``transcript_norm`` here. With
     ``payload_col`` the index MUST carry the payload key columns —
@@ -181,7 +181,7 @@ def incremental_dedup(
                 f"incremental_dedup: index_sigs lacks persisted payload digest "
                 f"columns {missing} and payloads are not part of the signature "
                 f"table — sign the index with payload_col={payload_col!r} "
-                f"(the pipeline's fused scan mode persists these keys)"
+                f"(the pipeline persists these keys)"
             )
         text_keys, text_digests = exact_dedup_digest_keys(
             "transcript_norm", None, cfg.exact_digest_algo

@@ -1,19 +1,21 @@
 """End-to-end dedup pipeline (SURVEY.md §3.1 new-engine lifecycle).
 
     read audio_clips
-      -> normalize (native exprs)                [stage: normalized]
-      -> exact dedup on content digests          [stage: exact_dedup]
-      -> MinHash + SimHash signatures (Arrow)    [stage: signatures]
-      -> LSH candidates (text + audio)           [stage: candidates]
+      -> normalize (native exprs)
+      -> ONE payload pass: content digests + MinHash + SimHash
+         signatures (Arrow)                      [stage: signatures]
+      -> exact dedup ranked on the digests       [stage: exact_edges]
+      -> LSH candidates (text + audio)
       -> verify (Jaccard / Hamming / suffix-SA)  [stage: verified_pairs]
       -> connected components (star/star)        [stage: components]
-      -> clusters + survivors + metrics          [stages: clusters, survivors]
+      -> survivors + cluster summary             [stages: survivors, clusters]
 
-Every stage checkpoints through WarehouseIO (resume = skip committed
-stages, the reference's exists-check pattern at
-``create_silver_label.py:224``). The binary payload is dropped right
-after signature computation and re-joined only for the survivor
-output, so ``bytes`` never rides a shuffle (SURVEY.md §7 hard part d).
+Each bracketed stage commits through WarehouseIO (resume = skip
+committed stages, the reference's exists-check pattern at
+``create_silver_label.py:224``) and reports the row count its write
+observed. The binary payload is read once, dropped right after
+signature computation and re-joined only for the survivor output, so
+``bytes`` never rides a shuffle (SURVEY.md §7 hard part d).
 """
 
 from __future__ import annotations
@@ -30,8 +32,11 @@ from ..functions import minhash as M
 from ..functions import text as X
 from ..operators import lsh, verify
 from ..operators.components import assign_components, connected_components
+from ..operators.exact_dedup import (
+    digest_rank_edges, exact_dedup_digest_keys, kept_from_edges,
+)
 from ..operators.survivors import cluster_summary, select_survivors
-from ..sources.warehouse import WarehouseIO
+from ..sources.warehouse import WarehouseIO, observe_rows
 
 
 def _estimated_scan_partitions(df: DataFrame, max_partition_bytes: int = 64 << 20) -> int:
@@ -92,8 +97,6 @@ class StageMetric:
     stage: str
     rows_out: int
     seconds: float
-    write_sec: float = 0.0
-    count_sec: float = 0.0
 
 
 @dataclass
@@ -115,11 +118,7 @@ class PipelineResult:
 
     def metrics_dict(self) -> dict:
         out = {
-            m.stage: {
-                "rows": m.rows_out,
-                "sec": round(m.seconds, 3),
-                "write_sec": round(m.write_sec, 3),
-            }
+            m.stage: {"rows": m.rows_out, "sec": round(m.seconds, 3)}
             for m in self.metrics
         }
         if self.lsh_stats:
@@ -136,18 +135,20 @@ class DedupPipeline:
         self.wh = warehouse
 
     def _stage(
-        self, df: DataFrame, name: str, resume: bool,
-        metrics: list[StageMetric], count_rows: bool = True,
+        self, df: DataFrame, name: str, resume: bool, metrics: list[StageMetric]
     ) -> DataFrame:
+        """Commit one stage. A stage written now reports the row count
+        observed by its own write job; one loaded from a committed table
+        on resume reports -1 (its write never ran, and ``Observation.get``
+        on an unexecuted plan would block forever)."""
         t0 = time.monotonic()
-        out = self.wh.checkpoint(df, name, resume=resume)
-        t1 = time.monotonic()
-        # row counts are metrics sugar, not needed for correctness: in
-        # min-checkpoint mode every count is one more job on the
-        # latency floor, so the caller turns them off (rows = -1)
-        n = out.count() if count_rows else -1
-        t2 = time.monotonic()
-        metrics.append(StageMetric(name, n, t2 - t0, t1 - t0, t2 - t1))
+        if resume and self.wh.exists(name):
+            out, rows = self.wh.load_clean(name), -1
+        else:
+            observed, obs = observe_rows(df)
+            out = self.wh.checkpoint(observed, name)
+            rows = obs.get["rows"]
+        metrics.append(StageMetric(name, rows, time.monotonic() - t0))
         return out
 
     def run(
@@ -155,48 +156,41 @@ class DedupPipeline:
         clips: DataFrame,
         resume: bool = False,
         with_audio: bool = True,
-        checkpoint_mode: str = "all",
+        checkpoint_mode: str = "min",
         payload_in_survivors: bool = True,
     ) -> PipelineResult:
-        """checkpoint_mode:
-        - "all": every stage materializes to the warehouse (finest
-          resume granularity; the test suite uses this).
-        - "min": only signatures / verified_pairs / components /
-          survivors / clusters checkpoint. Candidate pairs are NOT
-          materialized — they are a pure re-derivation of the committed
-          signature table (explode + window + self-join), so committing
-          them buys no resume granularity that verified_pairs doesn't
-          already provide, and at production latency the two extra
-          commits are pure floor. Cheap projections and windows stay
-          lazy and fuse into the downstream stage.
+        """Commits signatures, exact_edges, verified_pairs, components,
+        survivors and clusters. Candidate pairs are NOT materialized —
+        they are a pure re-derivation of the committed signature table
+        (explode + window + self-join), so committing them buys no
+        resume granularity that verified_pairs doesn't already provide.
+        Cheap projections and windows stay lazy and fuse into the
+        downstream stage.
+
+        checkpoint_mode: only "min" (the shape above) is accepted; the
+        parameter stays because the frozen bench.py passes it.
 
         payload_in_survivors: when False the survivors table carries
         clip metadata but not ``bytes`` — the 100 TB shape: payloads are
         immutable in the lake and are addressed by ``clip_id``, never
         rewritten by the dedup job.
         """
+        if checkpoint_mode != "min":
+            raise ValueError(f"checkpoint_mode must be 'min', got {checkpoint_mode!r}")
         cfg = self.cfg
         t_run = time.monotonic()
         metrics: list[StageMetric] = []
-        cp_all = checkpoint_mode == "all"
 
         def stage(df: DataFrame, name: str) -> DataFrame:
-            return self._stage(df, name, resume, metrics, count_rows=cp_all)
-
-        def maybe_stage(df: DataFrame, name: str) -> DataFrame:
-            if cp_all:
-                return stage(df, name)
-            return df
+            return self._stage(df, name, resume, metrics)
 
         # ---- normalize (native exprs only) -------------------------------
         normalized = clips.select(
             "clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript",
             X.normalize_text(F.col("transcript")).alias("transcript_norm"),
         )
-        normalized = maybe_stage(normalized, "normalized")
 
         offset_tier = with_audio and cfg.with_offset_audio
-        fused_scan = cfg.signature_scan_mode == "fused"
         cores = self.spark.sparkContext.defaultParallelism
 
         def add_signature_columns(df: DataFrame) -> DataFrame:
@@ -254,106 +248,54 @@ class DedupPipeline:
             independent chunk partitions (S8 mid-stage commits): a job
             killed at chunk k resumes at chunk k instead of recomputing
             hours of fingerprints."""
-            if cfg.signature_chunks > 0:
-                t0 = time.monotonic()
-                out = self.wh.checkpoint_chunked(
-                    df, "signatures", cfg.signature_chunk_col,
-                    n_chunks=cfg.signature_chunks, resume=resume,
-                )
-                t1 = time.monotonic()
-                n = out.count() if cp_all else -1
-                t2 = time.monotonic()
-                metrics.append(
-                    StageMetric("signatures", n, t2 - t0, t1 - t0, t2 - t1)
-                )
-                return out
-            return stage(df, "signatures")
+            if cfg.signature_chunks <= 0:
+                return stage(df, "signatures")
+            t0 = time.monotonic()
+            observations: list = []
+            out = self.wh.checkpoint_chunked(
+                df, "signatures", cfg.signature_chunk_col,
+                n_chunks=cfg.signature_chunks, resume=resume,
+                observations=observations,
+            )
+            # a resumed run skips committed chunks: its count is partial
+            rows = -1 if resume else sum(o.get["rows"] for o in observations)
+            metrics.append(StageMetric("signatures", rows, time.monotonic() - t0))
+            return out
 
-        if fused_scan:
-            # ---- ONE payload pass: digests + every signature -------------
-            # Exact dedup then ranks the narrow digest projection of the
-            # checkpointed signature table, and keepers are selected by a
-            # broadcast anti-join against the (small) dropped-id set — the
-            # payload is read exactly once end-to-end. Tradeoff vs
-            # dedup_first: fingerprints are computed for rows exact dedup
-            # will drop, so prefer dedup_first when the dup rate is high
-            # and fused when payload I/O dominates (the 100 TB shape).
-            from ..operators.exact_dedup import (
-                digest_rank_edges, exact_dedup_digest_keys, kept_from_edges,
-            )
+        # ---- ONE payload pass: digests + every signature -----------------
+        # Exact dedup then ranks the narrow digest projection of the
+        # committed signature table, and keepers are selected by an
+        # anti-join against the (small) dropped-id set — the payload is
+        # read exactly once end-to-end. The Arrow-UDF work is spread
+        # across every core, but only shuffled when the scan is genuinely
+        # under-partitioned (a wide parquet scan is already parallel).
+        src = normalized
+        if _estimated_scan_partitions(normalized) < cores:
+            src = src.repartition(cores * 2)
+        keys, digests = exact_dedup_digest_keys(
+            "transcript_norm", "bytes" if with_audio else None,
+            cfg.exact_digest_algo,
+        )
+        sigs_all = sig_stage(
+            add_signature_columns(src.select("*", *digests)).select(*sig_cols, *keys)
+        )
 
-            src = normalized
-            if _estimated_scan_partitions(normalized) < cores:
-                src = src.repartition(cores * 2)
-            keys, digests = exact_dedup_digest_keys(
-                "transcript_norm", "bytes" if with_audio else None,
-                cfg.exact_digest_algo,
-            )
-            enriched = src.select("*", *digests)
-            sigs_all = sig_stage(
-                add_signature_columns(enriched).select(*sig_cols, *keys)
-            )
-
-            exact_edges = stage(
-                digest_rank_edges(sigs_all.select("clip_id", *keys), keys),
-                "exact_edges",
-            )
-            # driver-safety gate shared with the dedup_first path: the
-            # committed edge table makes the 'auto' count a cheap
-            # narrow scan, and above the cap the anti-join runs without
-            # a broadcast hint instead of force-broadcasting an
-            # arbitrarily large dropped-id set
-            t_kept = time.monotonic()
-            sigs = kept_from_edges(
-                sigs_all, exact_edges, "clip_id",
-                cfg.exact_dedup_strategy, cfg.exact_dedup_max_broadcast_ids,
-            ).drop(*keys)
-            metrics.append(
-                StageMetric("exact_auto_count", -1, time.monotonic() - t_kept)
-            )
-        else:
-            # ---- exact dedup on content digests (reference ordering) -----
-            # The edge list is staged STRAIGHT to the warehouse — one
-            # digest scan total, timed as the exact_edges stage — and
-            # keepers derive from the committed table (kept_from_edges,
-            # same strategy gate as the fused path). On resume the stage
-            # loads the committed table, so the digest scan never re-runs.
-            from ..operators.exact_dedup import (
-                digest_rank_edges, exact_dedup_digest_keys, kept_from_edges,
-            )
-
-            key_names, digests = exact_dedup_digest_keys(
-                "transcript_norm", "bytes" if with_audio else None,
-                cfg.exact_digest_algo,
-            )
-            exact_edges = stage(
-                digest_rank_edges(
-                    normalized.select("clip_id", *digests), key_names
-                ),
-                "exact_edges",
-            )
-            t_kept = time.monotonic()
-            exact = kept_from_edges(
-                normalized, exact_edges, "clip_id",
-                cfg.exact_dedup_strategy, cfg.exact_dedup_max_broadcast_ids,
-            )
-            metrics.append(
-                StageMetric("exact_auto_count", -1, time.monotonic() - t_kept)
-            )
-            exact = maybe_stage(exact, "exact_dedup")
-
-            # ---- signatures (payload dropped after this stage) -----------
-            # spread the Arrow-UDF work across every core — but only
-            # shuffle when the scan is genuinely under-partitioned (a
-            # single-file table or a tiny checkpoint read-back); a wide
-            # parquet scan is already parallel, and repartitioning it
-            # would push the whole binary payload through a shuffle for
-            # nothing. The session sets spark.sql.files.maxPartitionBytes
-            # =64m so payload scans split finely enough to keep every
-            # core busy without that shuffle.
-            if _estimated_scan_partitions(normalized) < cores:
-                exact = exact.repartition(cores * 2)
-            sigs = sig_stage(add_signature_columns(exact).select(*sig_cols))
+        exact_edges = stage(
+            digest_rank_edges(sigs_all.select("clip_id", *keys), keys),
+            "exact_edges",
+        )
+        # driver-safety gate: the committed edge table makes the 'auto'
+        # count a cheap narrow scan, and above the cap the anti-join runs
+        # without a broadcast hint instead of force-broadcasting an
+        # arbitrarily large dropped-id set
+        t_kept = time.monotonic()
+        sigs = kept_from_edges(
+            sigs_all, exact_edges, "clip_id",
+            cfg.exact_dedup_strategy, cfg.exact_dedup_max_broadcast_ids,
+        ).drop(*keys)
+        metrics.append(
+            StageMetric("exact_auto_count", -1, time.monotonic() - t_kept)
+        )
 
         # ---- LSH candidates ------------------------------------------------
         # The band-bucket exchange (explode -> window on (band_id,
@@ -398,20 +340,12 @@ class DedupPipeline:
         # rest of the application
         try:
             cand_text = lsh.candidate_pairs(sized_text, cfg.max_bucket_size)
-            cand_text = maybe_stage(cand_text, "candidates_text")
-
-            if with_audio:
-                cand_audio = lsh.candidate_pairs(sized_audio, cfg.max_bucket_size)
-                cand_audio = maybe_stage(cand_audio, "candidates_audio")
-            else:
-                cand_audio = None
 
             # ---- verify ----------------------------------------------------
             # No pre-salting shuffle here: the verify equi-join hashes by
             # id_a/id_b regardless, so a salt repartition is a wasted pass
             # over the candidate table. Hot verify keys (one doc in many
-            # pairs) are handled by AQE skew-join splitting; lsh.salted()
-            # remains available for clusters running with AQE off.
+            # pairs) are handled by AQE skew-join splitting.
             # exact Jaccard runs on the int64 shingle-hash arrays, not the
             # 9-char string shingles: same value (xxhash64 collisions in
             # ~10^2-element sets are ~2^-50) at a fraction of the join
@@ -429,6 +363,7 @@ class DedupPipeline:
             verified = pairs_text.unionByName(contain)
 
             if with_audio:
+                cand_audio = lsh.candidate_pairs(sized_audio, cfg.max_bucket_size)
                 pairs_audio = verify.verify_hamming(
                     cand_audio, sigs, cfg.hamming_threshold
                 ).select(
@@ -531,22 +466,13 @@ class DedupPipeline:
             if sized_lm is not None:
                 sized_lm.unpersist()
         lsh_stats["cc"] = cc_info
-        # fused mode: the committed signatures table carries every row's
-        # (clip_id, transcript_norm) — committed BEFORE exact dedup, so
-        # its row set equals `normalized`'s — and reading two narrow
-        # columns from that checkpoint replaces a full re-scan of the
-        # corpus table + a transcript re-normalize (measured at 648k
-        # clips / 47 GB: the components stage drops ~20 s -> ~2 s at 8
-        # cores; at lake scale the avoided corpus scan is the whole
-        # point). dedup_first commits only keeper rows, so that path
-        # keeps reading `normalized` (dropped rows must still appear in
-        # the final clusters).
-        assign_nodes = (
-            sigs_all.select("clip_id", "transcript_norm")
-            if fused_scan
-            else normalized.select("clip_id", "transcript_norm")
-        )
-        clustered = assign_components(assign_nodes, comp)
+        # the committed signatures table carries every row's (clip_id,
+        # transcript_norm) — committed BEFORE exact dedup, so its row set
+        # equals the corpus's — and reading two narrow columns from that
+        # checkpoint replaces a full re-scan of the corpus table + a
+        # transcript re-normalize (measured at 648k clips / 47 GB: the
+        # components stage drops ~20 s -> ~2 s at 8 cores)
+        clustered = assign_components(sigs_all.select("clip_id", "transcript_norm"), comp)
         # always materialize: both the survivors and the clusters outputs
         # consume this (lazy it would run the assign join twice), and the
         # component assignment is the natural resume point after the CC loop

@@ -20,8 +20,17 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+
+def observe_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with a row-count Observation attached: the first action on
+    the returned frame fills ``obs.get["rows"]`` inside its own job, so
+    a stage write reports its row count without a separate count job.
+    Call ``get`` only after that action ran — it blocks until then."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
 def _needs_hadoop_fs(path: str) -> bool:
@@ -235,6 +244,7 @@ class WarehouseIO:
         chunk_expr,
         n_chunks: int = 8,
         resume: bool = False,
+        observations: list[Observation] | None = None,
     ) -> DataFrame:
         """Mid-stage incremental commit (SURVEY.md S8): the stage's
         output is written as ``n_chunks`` independently committed
@@ -256,7 +266,11 @@ class WarehouseIO:
         committed chunks from an earlier run with a larger ``n_chunks``
         (or a different chunking key) can neither survive a fresh run
         nor leak into the result of a resumed one. Lineage columns are
-        stamped like every other stage write."""
+        stamped like every other stage write.
+
+        ``observations``: when a list, every chunk write that runs
+        appends the row-count Observation of that chunk (observed after
+        the chunk filter, so the filter still prunes the upstream plan)."""
         chunk_desc = f"{n_chunks}:{self._chunk_key_desc(chunk_expr)}"
         if isinstance(chunk_expr, str):
             chunk_expr = F.pmod(F.xxhash64(F.col(chunk_expr)), F.lit(n_chunks))
@@ -280,7 +294,11 @@ class WarehouseIO:
         for i, sub in enumerate(chunk_dirs):
             if resume and self._fs_exists(os.path.join(sub, "_SUCCESS")):
                 continue
-            stamped.filter(chunk_expr == i).write.mode("overwrite").parquet(sub)
+            part = stamped.filter(chunk_expr == i)
+            if observations is not None:
+                part, obs = observe_rows(part)
+                observations.append(obs)
+            part.write.mode("overwrite").parquet(sub)
         # read back ONLY the expected chunk dirs (never `base` wholesale:
         # a resumed run must not pick up stale extra chunk=* dirs)
         out = self.spark.read.option("basePath", base).parquet(*chunk_dirs)

@@ -125,7 +125,7 @@ def test_pipeline_offset_tier_fused(spark, tmp_path):
 
     cfg = DedupConfig(with_offset_audio=True)
     res = DedupPipeline(spark, cfg, WarehouseIO(spark, str(tmp_path))).run(
-        df, with_audio=True, checkpoint_mode="min", payload_in_survivors=False
+        df, with_audio=True, payload_in_survivors=False
     )
     comp = {
         m: r["component"]

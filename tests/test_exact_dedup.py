@@ -41,7 +41,7 @@ def test_exact_dedup_edges_connect_drops_to_keeper(spark):
 
 def test_exact_dedup_strategies_agree_and_plan_shapes(spark):
     """All payload re-attach strategies return identical keepers/edges;
-    the broadcast branches must show a BroadcastHashJoin and the
+    the broadcast branch must show a BroadcastHashJoin and the
     shuffle branch must not broadcast (it's the bucketed-table path)."""
     pdf = pd.DataFrame(
         {
@@ -52,14 +52,14 @@ def test_exact_dedup_strategies_agree_and_plan_shapes(spark):
     )
     df = spark.createDataFrame(pdf)
     results = {}
-    for strat in ("anti_broadcast", "semi_broadcast", "shuffle", "auto"):
+    for strat in ("anti_broadcast", "shuffle", "auto"):
         kept, edges = exact_dedup_with_edges(df, strategy=strat)
         results[strat] = (
             {r["clip_id"] for r in kept.collect()},
             {(r["id_a"], r["id_b"]) for r in edges.collect()},
         )
         plan = kept._jdf.queryExecution().executedPlan().toString()
-        if strat in ("anti_broadcast", "semi_broadcast"):
+        if strat == "anti_broadcast":
             assert "BroadcastHashJoin" in plan
     base = results["anti_broadcast"]
     assert all(v == base for v in results.values())

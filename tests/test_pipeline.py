@@ -19,6 +19,9 @@ from sems_event_deduplication_spark.synth import AUDIO_CLIPS_SCHEMA, make_corpus
 from oracle_utils import intra_pairs, oracle_components
 
 CFG = DedupConfig()
+# the tables DedupPipeline.run commits, in commit order
+COMMITTED = ["signatures", "exact_edges", "verified_pairs", "components",
+             "survivors", "clusters"]
 
 
 @pytest.fixture(scope="module")
@@ -31,11 +34,11 @@ def result(spark, corpus, corpus_pdf):
         for m in r["member_ids"]
     }
     oracle = oracle_components(corpus_pdf, CFG, with_audio=True)
-    return res, pred, oracle
+    return res, pred, oracle, wh
 
 
 def test_recall_and_precision_vs_oracle(result):
-    _, pred, oracle = result
+    _, pred, oracle, _ = result
     op, pp = intra_pairs(oracle), intra_pairs(pred)
     assert op, "oracle found no dup pairs — fixture broken"
     recall = len(op & pp) / len(op)
@@ -45,7 +48,7 @@ def test_recall_and_precision_vs_oracle(result):
 
 
 def test_every_input_row_assigned(result, corpus_pdf):
-    _, pred, _ = result
+    _, pred, _, _ = result
     assert set(pred) == set(corpus_pdf["clip_id"])
 
 
@@ -53,7 +56,7 @@ def test_survivor_payload_invariant(result, spark, corpus):
     """BASELINE.json per-row invariant: survivors carry their source
     payload unmodified — transcript byte-equality + identical bytes
     (SNR is trivially inf for byte-identical PCM)."""
-    res, _, _ = result
+    res, _, _, _ = result
     joined = res.survivors.alias("o").join(
         corpus.alias("i"), F.col("o.clip_id") == F.col("i.clip_id")
     )
@@ -65,7 +68,7 @@ def test_survivor_payload_invariant(result, spark, corpus):
 
 
 def test_survivor_is_min_member(result):
-    res, _, _ = result
+    res, _, _, _ = result
     bad = res.clusters.filter(
         F.col("survivor_id") != F.array_min("member_ids")
     ).count()
@@ -94,8 +97,7 @@ def test_resume_idempotent(spark, corpus):
     r1 = pipe.run(corpus, with_audio=True)
     want = {frozenset(r["member_ids"]) for r in r1.clusters.collect()}
     # simulate a crash after the signatures stage: later tables vanish
-    for stage in ("candidates_text", "candidates_audio", "verified_pairs",
-                  "components", "survivors", "clusters"):
+    for stage in ("verified_pairs", "components", "survivors", "clusters"):
         wh.drop(stage)
     r2 = pipe.run(corpus, resume=True, with_audio=True)
     got = {frozenset(r["member_ids"]) for r in r2.clusters.collect()}
@@ -103,49 +105,48 @@ def test_resume_idempotent(spark, corpus):
 
 
 def test_metrics_emitted(result, corpus_pdf):
-    res, _, _ = result
-    stages = {m.stage for m in res.metrics}
-    assert {"normalized", "signatures", "verified_pairs", "components"} <= stages
+    """run() commits exactly the six stage tables, and each reports the
+    row count its own write observed (no count job, never -1)."""
+    res, pred, _, wh = result
+    assert sorted(os.listdir(wh.base_dir)) == sorted(COMMITTED)
+    rows = {m.stage: m.rows_out for m in res.metrics if m.stage in COMMITTED}
+    assert sorted(rows) == sorted(COMMITTED)
+    assert all(n >= 0 for n in rows.values()), rows
+    assert rows["signatures"] == rows["components"] == len(corpus_pdf)
+    n_comp = len(set(pred.values()))
+    assert rows["survivors"] == rows["clusters"] == n_comp
+    assert rows["exact_edges"] == wh.load("exact_edges").count()
+    assert rows["verified_pairs"] == res.verified_pairs.count()
     assert all(m.seconds >= 0 for m in res.metrics)
 
 
-def test_fused_scan_mode_parity(spark, corpus):
-    """signature_scan_mode='fused' (the r5 default: one payload pass —
-    digests + all fingerprints, exact dedup ranked on the narrow digest
-    projection afterwards) must produce exactly the clusters and
-    exact-dup edges of the dedup-first ordering (the reference's
-    two-scan shape, still selectable for mega-dup corpora)."""
-    from dataclasses import replace
+def test_exact_edges_match_operator(result, corpus):
+    """The committed exact_edges table (ranked on the digest columns of
+    the signatures pass) equals the standalone operator
+    ``exact_dedup_with_edges`` run on the normalized corpus."""
+    from sems_event_deduplication_spark.functions.text import normalize_text
+    from sems_event_deduplication_spark.operators.exact_dedup import (
+        exact_dedup_with_edges,
+    )
 
-    import tempfile
-
-    cfg_d = replace(CFG, signature_scan_mode="dedup_first")
-    wh_a = WarehouseIO(spark, tempfile.mkdtemp(prefix="wh_fuseda_"))
-    res_a = DedupPipeline(spark, cfg_d, wh_a).run(corpus, with_audio=True)
-    assert CFG.signature_scan_mode == "fused"  # the default under test
-    wh_b = WarehouseIO(spark, tempfile.mkdtemp(prefix="wh_fusedb_"))
-    res_b = DedupPipeline(spark, CFG, wh_b).run(corpus, with_audio=True)
-
-    def comp_map(res):
-        return {
-            m: r["component"]
-            for r in res.clusters.collect()
-            for m in r["member_ids"]
-        }
-
-    assert comp_map(res_a) == comp_map(res_b)
-    edges_a = {(r["id_a"], r["id_b"]) for r in
-               spark.read.parquet(wh_a.base_dir + "/exact_edges").collect()}
-    edges_b = {(r["id_a"], r["id_b"]) for r in
-               spark.read.parquet(wh_b.base_dir + "/exact_edges").collect()}
-    assert edges_a == edges_b
+    _, _, _, wh = result
+    got = {(r["id_a"], r["id_b"]) for r in wh.load("exact_edges").collect()}
+    normalized = corpus.select(
+        "clip_id", "bytes", normalize_text(F.col("transcript")).alias("transcript_norm")
+    )
+    _, edges = exact_dedup_with_edges(normalized, algo=CFG.exact_digest_algo)
+    want = {(r["id_a"], r["id_b"]) for r in edges.collect()}
+    assert want, "corpus planted no exact dups — fixture broken"
+    assert got == want
 
 
 def test_chunked_signature_commits(spark, corpus):
     """S8 mid-stage commits wired into the pipeline: the signatures
     stage lands as independently committed chunk partitions, results
     match the unchunked run, and a rerun with two chunk commits wiped
-    recomputes just those chunks and converges to the same clusters."""
+    recomputes just those chunks and converges to the same clusters.
+    The fresh chunked write reports every row; the resumed one, which
+    skips committed chunks, reports -1."""
     import os
     import tempfile
     from dataclasses import replace
@@ -170,10 +171,16 @@ def test_chunked_signature_commits(spark, corpus):
 
     assert cm(res) == cm(res2)
 
+    def sig_rows(r):
+        return next(m.rows_out for m in r.metrics if m.stage == "signatures")
+
+    assert sig_rows(res) == sig_rows(res2) == corpus.count()
+
     for c in chunks[:2]:
         os.remove(f"{base}/{c}/_SUCCESS")
     res3 = DedupPipeline(spark, cfg_c, wh).run(corpus, resume=True, with_audio=True)
     assert cm(res3) == cm(res2)
+    assert sig_rows(res3) == -1
 
 
 def test_boilerplate_mega_bucket_star_cap(spark):
@@ -217,7 +224,7 @@ def test_boilerplate_mega_bucket_star_cap(spark):
     cfg = replace(DedupConfig(), max_bucket_size=64)
     wh = WarehouseIO(spark, tempfile.mkdtemp(prefix="wh_skew_"))
     res = DedupPipeline(spark, cfg, wh).run(
-        df, with_audio=False, checkpoint_mode="min", payload_in_survivors=False
+        df, with_audio=False, payload_in_survivors=False
     )
     # member_ids is capped for mega clusters (by design) — read the
     # full assignment from the components stage table instead
@@ -235,22 +242,18 @@ def test_boilerplate_mega_bucket_star_cap(spark):
 
 
 def test_fused_min_mode_resume(spark, corpus):
-    """The flagship bench configuration (fused scan + min checkpoint
-    mode) must resume from its committed north-rule stages: a second
-    run with resume=True returns identical clusters WITHOUT recomputing
-    the signatures stage (commit marker mtime unchanged — at 100 TB the
+    """The pipeline must resume from its committed stages: a second run
+    with resume=True returns identical clusters WITHOUT recomputing the
+    signatures stage (commit marker mtime unchanged — at 100 TB the
     signature pass is hours; re-paying it would make resume
-    meaningless)."""
+    meaningless). Every stage it loads reports -1 rows: its write did
+    not run, so there is no observed count to wait for."""
     import os
     import tempfile
     import time
-    from dataclasses import replace
 
-    cfg_f = replace(CFG, signature_scan_mode="fused")
     wh = WarehouseIO(spark, tempfile.mkdtemp(prefix="wh_fresume_"))
-    res1 = DedupPipeline(spark, cfg_f, wh).run(
-        corpus, with_audio=True, checkpoint_mode="min"
-    )
+    res1 = DedupPipeline(spark, CFG, wh).run(corpus, with_audio=True)
 
     def cm(res):
         return {
@@ -264,11 +267,15 @@ def test_fused_min_mode_resume(spark, corpus):
     mtime = os.path.getmtime(sig_marker)
     time.sleep(1.1)
 
-    res2 = DedupPipeline(spark, cfg_f, wh).run(
-        corpus, resume=True, with_audio=True, checkpoint_mode="min"
-    )
+    res2 = DedupPipeline(spark, CFG, wh).run(corpus, resume=True, with_audio=True)
     assert cm(res2) == first
     assert os.path.getmtime(sig_marker) == mtime  # not recomputed
+
+    def rows(res):
+        return {m.stage: m.rows_out for m in res.metrics if m.stage in COMMITTED}
+
+    assert all(n >= 0 for n in rows(res1).values()), rows(res1)
+    assert rows(res2) == dict.fromkeys(COMMITTED, -1)
 
 
 def test_degenerate_corpora(spark):
@@ -346,6 +353,12 @@ def test_config_validates_enums_at_construction():
     with pytest.raises(ValueError, match="exact_digest_algo"):
         DedupConfig(exact_digest_algo="md5")
     DedupConfig(offset_verify_mode="count", exact_digest_algo="sha256")
+    # the single pipeline shape: the deleted dedup_first scan and "all"
+    # checkpoint mode are rejected, not silently run as the default
+    with pytest.raises(ValueError, match="signature_scan_mode"):
+        DedupConfig(signature_scan_mode="dedup_first")
+    with pytest.raises(ValueError, match="checkpoint_mode"):
+        DedupPipeline(None, DedupConfig(), None).run(None, checkpoint_mode="all")
 
 
 def test_g711_transcode_dups_cluster_via_audio_tier(spark):
@@ -417,13 +430,10 @@ def test_offset_dups_recovered_via_landmark_tier(spark):
     assert len(planted) >= 5, "fixture planted too few offset dups"
 
     def recovered(with_offset):
-        cfg = DedupConfig(
-            signature_scan_mode="fused", with_offset_audio=with_offset
-        )
+        cfg = DedupConfig(with_offset_audio=with_offset)
         wh = WarehouseIO(spark, tempfile.mkdtemp(prefix="wh_offs_"))
         DedupPipeline(spark, cfg, wh).run(
-            clips, with_audio=True, checkpoint_mode="min",
-            payload_in_survivors=False,
+            clips, with_audio=True, payload_in_survivors=False,
         )
         comp = wh.load_clean("components").select("clip_id", "component")
         gidc = F.substring_index("clip_id", "_", 1)

@@ -31,7 +31,7 @@ def test_spark_submit_py_files_package(tmp_path):
             "--py-files", pkg_zip,
             os.path.join(REPO, "scripts", "run_pipeline.py"),
             "--synth", "120", "--warehouse", str(tmp_path / "wh"),
-            "--checkpoint-mode", "min", "--cores", "4",
+            "--cores", "4",
         ],
         capture_output=True, text=True, timeout=480, env=env,
         cwd=str(tmp_path),  # NOT the repo root: the zip must supply the package
@@ -42,4 +42,18 @@ def test_spark_submit_py_files_package(tmp_path):
     metrics = json.loads(metrics_lines[-1])
     assert metrics["n_clips"] > 0
     assert metrics["clips_per_sec"] > 0
-    assert "signatures" in metrics["stages"]
+    # rows come from the write's own Observation, never the -1 placeholder
+    assert metrics["stages"]["signatures"]["rows"] > 0
+
+
+def test_unknown_config_key_is_cli_error(tmp_path):
+    """An unknown ``--config`` key is an argparse error naming the key,
+    raised before any SparkSession starts (no JVM: this returns fast)."""
+    out = subprocess.run(
+        [sys.executable, "-m", "sems_event_deduplication_spark.main",
+         "--warehouse", str(tmp_path / "wh"), "--config", "salt_buckets=4"],
+        capture_output=True, text=True, timeout=60, cwd=REPO,
+    )
+    assert out.returncode != 0
+    assert "salt_buckets" in out.stderr
+    assert not (tmp_path / "wh").exists()
